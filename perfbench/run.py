@@ -1,13 +1,14 @@
 #!/usr/bin/env python3
 """Run one benchmark workload against the engine in this checkout.
 
-    python3 perfbench/run.py --workload relational_sf1 --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload llm_pipeline --seed 1 --seconds 10 --trace 0
 
 One driver process, one client, one operation in flight (closed loop),
 on ``local[<nproc>]``. The run generates its inputs from ``--seed``,
 sets up (Spark session, query registry, ``.bro`` source, one warm-up
-pass), checks every operation's output, and runs as many whole passes
-as fill ``--seconds`` at the workload's nominal pass time. The last
+pass), makes the workload's untimed settle passes, checks every
+operation's output, and measures as many whole passes as fill
+``--seconds`` at the workload's nominal pass time. The last
 stdout line is the result:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
@@ -399,6 +400,7 @@ def run(args: argparse.Namespace, cpus: int, work: str) -> tuple[dict, dict]:
         out = Outcomes()
         warm = run_pass(ctx, wl, rng, out, traced=False)
         setup_s = time.perf_counter() - _T0 - generate_s - prepare_s - wl.excluded_s
+        settle = [run_pass(ctx, wl, rng, out, traced=False) for _ in range(wl.settle_passes)]
 
         passes = [
             run_pass(ctx, wl, rng, out, traced=bool(args.trace) and i % 2 == 1)
@@ -459,7 +461,8 @@ def run(args: argparse.Namespace, cpus: int, work: str) -> tuple[dict, dict]:
         "valid": valid,
         "inputs": inputs,
         "setup": {"setup_s": setup_s, "session_s": session_s, "registry_s": registry_s,
-                  "warmup_pass_s": warm.wall_s, "generate_s": generate_s,
+                  "warmup_pass_s": warm.wall_s, "settle_pass_s": [p.wall_s for p in settle],
+                  "generate_s": generate_s,
                   "oracle_s": prepare_s + wl.excluded_s},
         "peak_rss_kib": rss,
         "passes": [{"traced": p.traced, "wall_s": p.wall_s, "op_s": p.op_s} for p in passes],
