@@ -15,8 +15,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical RAM, capped at 16g: on a host with no swap a
+    16g heap plus the JVM's own overhead can exhaust memory."""
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (ValueError, OSError):
+        return "16g"
+    return f"{max(1, min(16 << 10, phys // 2 >> 20))}m"
+
+
 def get_spark(app_name: str = "hadoop_brotli_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -26,7 +37,7 @@ def get_spark(app_name: str = "hadoop_brotli_spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

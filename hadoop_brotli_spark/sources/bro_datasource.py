@@ -1,6 +1,9 @@
 """``.bro`` as a first-class Spark data source:
-``spark.read.format("bro")`` / ``df.write.format("bro")`` via the
-PySpark 4 Python DataSource API.
+``spark.read.format("bro")`` / ``df.write.format("bro")`` /
+``readStream`` / ``writeStream`` via the PySpark 4 Python DataSource
+API. This module is the only ``.bro`` I/O path: the batch reader and
+writer and the streaming reader and writer all live here, and the
+function-style helpers in ``bro_spark.py`` are thin wrappers over it.
 
 This is the closest Spark-native analog of the reference's codec SPI
 registration (`BroCodec` listed in ``io.compression.codecs`` +
@@ -11,7 +14,9 @@ session opens ``.bro`` files by format name with the same
 through Hadoop conf.
 
 Reference-semantics notes:
-- extension dispatch: only ``*.bro`` files are listed (§2a #4)
+- extension dispatch: only ``*.bro`` files are listed (§2a #4); a
+  path (or glob match) that is a directory contributes the ``*.bro``
+  files directly inside it
 - legacy v1 files are non-splittable: one file ⇒ one InputPartition ⇒
   one task (§4), exactly like the reference's one-map-task-per-file
   deployment (`BroCodec.java:18` never implements
@@ -91,12 +96,19 @@ class BroCommit(WriterCommitMessage):
         self.final = final
 
 
-def _list_bro_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(glob.glob(os.path.join(path, f"*{BRO_EXTENSION}")))
-    if path.endswith(BRO_EXTENSION) and os.path.exists(path):
-        return [path]
-    return sorted(p for p in glob.glob(path) if p.endswith(BRO_EXTENSION))
+def _list_bro_files(path: str, skip_dir: str | None = None) -> list[str]:
+    """``*.bro`` files named by ``path``: a file, a directory, or a glob
+    whose matches are either. A matched directory contributes the
+    ``*.bro`` files directly inside it, unless it is ``skip_dir``."""
+    skip = os.path.abspath(skip_dir) if skip_dir else None
+    files: list[str] = []
+    for p in [path] if os.path.isdir(path) else glob.glob(path):
+        if os.path.isdir(p):
+            if os.path.abspath(p) != skip:
+                files += glob.glob(os.path.join(glob.escape(p), f"*{BRO_EXTENSION}"))
+        elif p.endswith(BRO_EXTENSION):
+            files.append(p)
+    return sorted(files)
 
 
 def _file_partitions(path: str) -> list[InputPartition]:
@@ -167,7 +179,78 @@ class BroReader(DataSourceReader):
         return _partition_rows(partition, self.config)
 
 
+def _write_lines(rows: Iterator, tmp: str, config: BroConfig) -> bool:
+    """Encode each row's first column as one newline-terminated line
+    into ``tmp``, in line-aligned chunks of ``bro.block-size`` (framed)
+    or ``bro.buffer-size`` (v1) bytes. Runs on executors for both
+    sinks. Returns whether any row was consumed: the v1 flush tail is
+    a few bytes even for zero input, so emitted bytes cannot tell."""
+    consumed = False
+    chunk_size = config.block_size if config.framed else config.buffer_size
+
+    def line_chunks() -> Iterator[bytes]:
+        nonlocal consumed
+        batch: list[str] = []
+        size = 0
+        for row in rows:
+            consumed = True
+            v = row[0]
+            batch.append("" if v is None else str(v))
+            size += len(batch[-1]) + 1
+            if size >= chunk_size:
+                yield ("\n".join(batch) + "\n").encode("utf-8")
+                batch, size = [], 0
+        if batch:
+            yield ("\n".join(batch) + "\n").encode("utf-8")
+
+    if config.framed:
+        # Splittable BRO2: each line-aligned chunk becomes one
+        # independently compressed block; the footer index makes a
+        # big task output fan back out to N read tasks.
+        with Bro2Writer(tmp, config) as w:
+            for chunk in line_chunks():
+                w.write_block(chunk)
+            if not consumed:
+                w.write_block(b"")
+    else:
+        with open(tmp, "wb") as f:
+            for block in compress_stream(line_chunks(), config):
+                f.write(block)
+    return consumed
+
+
+def _publish(tmp: str, final: str) -> None:
+    """Atomic publish on the driver. Bump mtime to publish time before
+    the rename: os.replace preserves the temp file's mtime (set when
+    the executor wrote it, possibly seconds earlier), and the stream
+    reader's (mtime_ns, name) watermark would otherwise see a key that
+    predates visibility — a concurrent poll could advance past it and
+    skip the file forever. Explicit ns (not UTIME_NOW) — the kernel's
+    coarse clock can lag time_ns by a tick."""
+    import time
+
+    now = time.time_ns()
+    os.utime(tmp, ns=(now, now))
+    os.replace(tmp, final)
+
+
+def _remove_all(pattern: str) -> None:
+    """Sweep temp files from failed/speculative task attempts: those
+    never deliver a commit message, so abort() alone cannot reclaim
+    them. Sinks are single-writer (see BroStreamWriter), so any temp
+    left at commit/abort time is dead."""
+    for leftover in glob.glob(pattern):
+        try:
+            os.remove(leftover)
+        except OSError:
+            pass
+
+
 class BroWriter(DataSourceWriter):
+    """Batch ``.bro`` sink: one ``part-<partition>.bro`` per task,
+    published by ``commit()`` only on job success. Empty partitions
+    still publish a (zero-line) file."""
+
     def __init__(self, options: dict, overwrite: bool) -> None:
         self.path = options.get("path")
         if not self.path:
@@ -185,63 +268,13 @@ class BroWriter(DataSourceWriter):
         os.makedirs(self.path, exist_ok=True)
         final = os.path.join(self.path, f"part-{pid:05d}{BRO_EXTENSION}")
         tmp = f"{final}.{uuid.uuid4().hex}.tmp"
-
-        batch_size = (
-            self.config.block_size if self.config.framed
-            else self.config.buffer_size
-        )
-
-        def line_chunks() -> Iterator[bytes]:
-            batch: list[str] = []
-            size = 0
-            for row in rows:
-                v = row[0]
-                batch.append("" if v is None else str(v))
-                size += len(batch[-1]) + 1
-                if size >= batch_size:
-                    yield ("\n".join(batch) + "\n").encode("utf-8")
-                    batch, size = [], 0
-            if batch:
-                yield ("\n".join(batch) + "\n").encode("utf-8")
-
-        if self.config.framed:
-            # Splittable BRO2: each line-aligned chunk becomes one
-            # independently compressed block; the footer index makes a
-            # big task output fan back out to N read tasks.
-            with Bro2Writer(tmp, self.config) as w:
-                wrote = False
-                for chunk in line_chunks():
-                    w.write_block(chunk)
-                    wrote = True
-                if not wrote:
-                    w.write_block(b"")
-        else:
-            with open(tmp, "wb") as f:
-                for block in compress_stream(line_chunks(), self.config):
-                    f.write(block)
+        _write_lines(rows, tmp, self.config)
         return BroCommit(tmp=tmp, final=final)
 
     def commit(self, messages: list[BroCommit]) -> None:
-        # Publish atomically only on job success (rename per task
-        # file), then sweep temp files from failed/speculative task
-        # attempts — those never deliver a commit message, so abort()
-        # alone cannot reclaim them. Single-writer local/shared-FS
-        # assumption: see class docstring.
         for m in messages:
             if m is not None:
-                # Bump mtime to publish time before the rename:
-                # os.replace preserves the temp file's mtime (set when
-                # the executor wrote it, possibly seconds earlier), and
-                # the stream reader's (mtime_ns, name) watermark would
-                # otherwise see a key that predates visibility — a
-                # concurrent poll could advance past it and skip the
-                # file forever. Explicit ns (not UTIME_NOW) — the
-                # kernel's coarse clock can lag time_ns by a tick.
-                import time
-
-                now = time.time_ns()
-                os.utime(m.tmp, ns=(now, now))
-                os.replace(m.tmp, m.final)
+                _publish(m.tmp, m.final)
         self._sweep_stale_tmps()
 
     def abort(self, messages: list[BroCommit]) -> None:
@@ -251,15 +284,7 @@ class BroWriter(DataSourceWriter):
         self._sweep_stale_tmps()
 
     def _sweep_stale_tmps(self) -> None:
-        import glob
-
-        for leftover in glob.glob(
-            os.path.join(self.path, f"part-*{BRO_EXTENSION}.*.tmp")
-        ):
-            try:
-                os.remove(leftover)
-            except OSError:
-                pass
+        _remove_all(os.path.join(self.path, f"part-*{BRO_EXTENSION}.*.tmp"))
 
 
 class _BroEmptyPartition(InputPartition):
@@ -369,6 +394,9 @@ class BroStreamReader(DataSourceStreamReader):
                     "would live inside the pattern)"
                 )
             self.archive_dir = os.path.join(self.path, "_archive")
+        # Listing skips archive_dir even when a glob path matches it:
+        # archived files keep their (mtime, name) keys, so a replayed
+        # batch would plan them a second time.
         self._wm: list | None = None  # driver-side monotonic cache
 
     def _floor(self, *offsets: dict) -> None:
@@ -412,7 +440,7 @@ class BroStreamReader(DataSourceStreamReader):
         now_ns = time.time_ns()
         ready: list[list] = []
         in_flight: list[list] = []
-        for p in _list_bro_files(self.path):
+        for p in _list_bro_files(self.path, self.archive_dir):
             try:
                 key = _file_key(p)
             except OSError:
@@ -439,7 +467,7 @@ class BroStreamReader(DataSourceStreamReader):
         self._floor(start, end)  # replayed offsets re-seed the floor
         lo, hi = list(start["wm"]), list(end["wm"])
         parts: list[InputPartition] = []
-        for p in _list_bro_files(self.path):
+        for p in _list_bro_files(self.path, self.archive_dir):
             try:
                 key = _file_key(p)
             except OSError:
@@ -466,7 +494,7 @@ class BroStreamReader(DataSourceStreamReader):
         if self.clean_source == "off":
             return
         hi = list(end["wm"])
-        for p in _list_bro_files(self.path):
+        for p in _list_bro_files(self.path, self.archive_dir):
             try:
                 key = _file_key(p)
             except OSError:
@@ -528,62 +556,16 @@ class BroStreamWriter(DataSourceStreamWriter):
         tmp = os.path.join(
             self.path, f".epoch-{uuid.uuid4().hex}-{pid:05d}.tmp"
         )
-
-        # Track row consumption, not emitted bytes: the codec flush
-        # tail means compress_stream yields ~8 bytes even for zero
-        # input, so "did the compressor emit" is always true and
-        # would publish junk zero-line files for empty partitions.
-        consumed = [False]
-        batch_size = (
-            self.config.block_size if self.config.framed
-            else self.config.buffer_size
-        )
-
-        def line_chunks() -> Iterator[bytes]:
-            batch: list[str] = []
-            size = 0
-            for row in iterator:
-                consumed[0] = True
-                v = row[0]
-                batch.append("" if v is None else str(v))
-                size += len(batch[-1]) + 1
-                if size >= batch_size:
-                    yield ("\n".join(batch) + "\n").encode("utf-8")
-                    batch, size = [], 0
-            if batch:
-                yield ("\n".join(batch) + "\n").encode("utf-8")
-
-        if self.config.framed:
-            with Bro2Writer(tmp, self.config) as w:
-                for chunk in line_chunks():
-                    w.write_block(chunk)
-                if not w._blocks:
-                    w.write_block(b"")
-        else:
-            with open(tmp, "wb") as f:
-                for block in compress_stream(line_chunks(), self.config):
-                    f.write(block)
-        if not consumed[0]:  # empty partition: publish nothing
-            os.remove(tmp)
+        if not _write_lines(iterator, tmp, self.config):
+            os.remove(tmp)  # empty partition: publish nothing
             return BroCommit(tmp="", final="")
         return BroCommit(tmp=tmp, final=f"{pid:05d}")
 
     def commit(self, messages, batchId: int) -> None:
         for m in messages:
             if m is not None and m.tmp:
-                final = os.path.join(
-                    self.path,
-                    f"part-{batchId:08d}-{m.final}{BRO_EXTENSION}",
-                )
-                # mtime := publish time (see BroWriter.commit): the
-                # temp file's write-time mtime predates visibility and
-                # would let a downstream stream reader's watermark
-                # race past this file.
-                import time
-
-                now = time.time_ns()
-                os.utime(m.tmp, ns=(now, now))
-                os.replace(m.tmp, final)
+                final = f"part-{batchId:08d}-{m.final}{BRO_EXTENSION}"
+                _publish(m.tmp, os.path.join(self.path, final))
         self._sweep_stale_tmps()
 
     def abort(self, messages, batchId: int) -> None:
@@ -593,18 +575,9 @@ class BroStreamWriter(DataSourceStreamWriter):
         self._sweep_stale_tmps()
 
     def _sweep_stale_tmps(self) -> None:
-        # Failed/speculative task attempts never deliver a commit
-        # message, so their uuid-named temps would accumulate
-        # forever; epochs are serial per query and the dir is
-        # single-writer (class docstring), so any leftover temp at
-        # commit/abort time is dead.
-        import glob
-
-        for leftover in glob.glob(os.path.join(self.path, ".epoch-*.tmp")):
-            try:
-                os.remove(leftover)
-            except OSError:
-                pass
+        # Epochs are serial per query, so a temp left at commit/abort
+        # belongs to a dead task attempt.
+        _remove_all(os.path.join(self.path, ".epoch-*.tmp"))
 
 
 class BroDataSource(DataSource):

@@ -1,38 +1,34 @@
-"""Spark integration for the ``.bro`` codec: DataFrame text
-source/sink, mirroring how the reference plugs into Spark through
-Hadoop's codec SPI (SURVEY.md §3 EP1/EP2).
+"""Function-style ``.bro`` text helpers over ``format("bro")``.
 
-Semantics preserved from the reference:
-- extension dispatch: only ``*.bro`` files are read (BroCodec.java:56-59)
-- non-splittable: one file ⇒ one partition (the codec implements
-  CompressionCodec, not SplittableCompressionCodec — BroCodec.java:18)
-- streaming, bounded-memory decode inside each task
-- config knobs ``bro.quality`` / ``bro.buffer-size``
+``sources/bro_datasource.py`` is the one ``.bro`` implementation: its
+batch and streaming readers and writers serve every ``.bro`` read,
+write and stream. The functions here only register that source and
+call ``spark.read.format("bro")`` / ``df.write.format("bro")``, so
+they take the same ``bro.*`` options and split BRO2 files per block.
 
-Scale notes (100 TB): a non-splittable codec caps parallelism at the
-file count — the writer therefore emits one file per partition
-(``repartition`` upstream to size files ~128 MiB–1 GiB). For
-analytics data, prefer parquet (splittable row-group compression);
-this path exists for codec-capability parity and raw-text pipelines.
+``write_bro_text`` writes BRO2 (splittable) files by default, like
+``format("bro")``; ``{"bro.framed": "false"}`` writes the raw v1
+streams the reference codec reads. Both layouts read back.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 from typing import Any
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .bro_codec import (
-    BRO_EXTENSION,
-    BroConfig,
-    compress_stream,
-    decompress_stream,
-)
+from .bro_codec import BRO_EXTENSION
+from .bro_datasource import register_bro_source
+
+
+def _published(out_dir: str) -> dict[str, int]:
+    return {
+        e.name: e.stat().st_mtime_ns
+        for e in os.scandir(out_dir)
+        if e.name.endswith(BRO_EXTENSION)
+    }
 
 
 def write_bro_text(
@@ -42,50 +38,19 @@ def write_bro_text(
     options: dict[str, Any] | None = None,
 ) -> int:
     """Write one string column as newline-delimited ``.bro`` files,
-    one file per partition (executor-side streaming compression).
+    one file per partition, through ``df.write.format("bro")``.
 
-    Returns the number of files written. The per-partition writer is
-    the legitimate imperative island (SURVEY.md data-model decision):
-    everything upstream stays a DataFrame.
+    Returns the number of files published: the writer's commit bumps
+    each published file's mtime, so those are the ``.bro`` names that
+    are new or carry a new mtime.
     """
-    config = BroConfig.from_options(options)
+    register_bro_source(df.sparkSession)
     os.makedirs(out_dir, exist_ok=True)
-
-    def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import socket
-        import uuid
-
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
-        path = os.path.join(out_dir, f"part-{pid:05d}{BRO_EXTENSION}")
-
-        def line_chunks() -> Iterator[bytes]:
-            for pdf in batches:
-                if len(pdf):
-                    yield ("\n".join(pdf[column].astype(str)) + "\n").encode("utf-8")
-
-        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-        n = 0
-        with open(tmp, "wb") as f:
-            for block in compress_stream(line_chunks(), config):
-                f.write(block)
-                n += len(block)
-        os.replace(tmp, path)  # atomic publish, task-retry safe
-        yield pd.DataFrame(
-            {"path": [path], "bytes": [n], "host": [socket.gethostname()]}
-        )
-
-    report = df.select(F.col(column)).mapInPandas(
-        write_partition, schema="path string, bytes long, host string"
-    )
-    return report.count()
-
-
-BINARY_FILE_SCHEMA = (
-    "path string, modificationTime timestamp, length long, content binary"
-)
+    before = _published(out_dir)
+    df.select(F.col(column)).write.format("bro").options(
+        **(options or {})
+    ).mode("append").save(out_dir)
+    return sum(1 for k, v in _published(out_dir).items() if before.get(k) != v)
 
 
 def read_bro_text(
@@ -93,68 +58,11 @@ def read_bro_text(
     path: str,
     options: dict[str, Any] | None = None,
 ) -> DataFrame:
-    """Read ``.bro`` files into DataFrame[value: string, path: string].
-
-    binaryFile scan (one file ⇒ one row ⇒ one work unit, matching the
-    non-splittable reference) → streaming decompress + line split in
-    an Arrow-batched pandas transform.
-    """
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", f"*{BRO_EXTENSION}")
-        .load(path)
-        .select("path", "content")
-    )
-    # one file per task: repartition by file so big files don't queue
-    # behind each other on one core
-    files = files.repartition("path")
-    return _decode_files(files, options)
-
-
-def stream_bro_text(
-    spark: SparkSession,
-    path: str,
-    options: dict[str, Any] | None = None,
-) -> DataFrame:
-    """Structured-Streaming ``.bro`` source: new ``*.bro`` files
-    landing under ``path`` are decompressed incrementally (file
-    discovery and exactly-once tracking come from Spark's file
-    streaming source; the decode is the same mapInPandas transform
-    as the batch reader). Pair with ``.writeStream`` + checkpoint
-    for a continuously-ingesting codec pipeline."""
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(BINARY_FILE_SCHEMA)
-        .option("pathGlobFilter", f"*{BRO_EXTENSION}")
-        .load(path)
-        .select("path", "content")
-    )
-    return _decode_files(files, options)
-
-
-def _decode_files(
-    files: DataFrame, options: dict[str, Any] | None = None
-) -> DataFrame:
-    config = BroConfig.from_options(options)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                text = b"".join(
-                    decompress_stream(
-                        (
-                            bytes(content[i : i + config.buffer_size])
-                            for i in range(0, len(content), config.buffer_size)
-                        ),
-                        config,
-                    )
-                ).decode("utf-8")
-                lines = text.split("\n")
-                if lines and lines[-1] == "":
-                    lines.pop()
-                yield pd.DataFrame({"value": lines, "path": fpath})
-
-    return files.mapInPandas(decode, schema="value string, path string")
+    """Read ``.bro`` files (a directory, a file or a glob) into
+    DataFrame[value: string, path: string] through
+    ``spark.read.format("bro")``."""
+    register_bro_source(spark)
+    return spark.read.format("bro").options(**(options or {})).load(path)
 
 
 def read_bro_csv(
@@ -170,7 +78,7 @@ def read_bro_csv(
 
     This is the reference's deployment pattern — a Hadoop job reading
     codec-compressed delimited text — as one declarative plan: the
-    decode UDF feeds Catalyst expressions, no second pass. With
+    decoded lines feed Catalyst expressions, no second pass. With
     ``header=True`` the per-file header line (matching the schema's
     column names) is dropped.
     """

@@ -216,11 +216,20 @@ def test_bro_python_datasource_roundtrip(spark, sf_dir, tmp_path):
     assert sorted(r.value for r in back.collect()) == sorted(
         r.value for r in docs.collect()
     )
+    # a glob match that is a directory contributes the .bro files
+    # directly inside it, next to the files the glob matched itself
+    docs.coalesce(1).write.format("bro").mode("append").save(f"{out}/wave2")
+    both = spark.read.format("bro").load(f"{out}/*")
+    assert sorted(r.value for r in both.collect()) == sorted(
+        2 * [r.value for r in docs.collect()]
+    )
 
 
 def test_bro_datasource_streaming(spark, sf_dir, tmp_path):
     """Streaming format('bro'): files present at start are one batch;
-    a file landing later is picked up as a new batch."""
+    a file landing later is picked up as a new batch; a glob over the
+    directory and a later subdirectory streams both waves, the same
+    rows as the batch read of that glob."""
     import glob
 
     from pyspark.sql import functions as F
@@ -230,6 +239,10 @@ def test_bro_datasource_streaming(spark, sf_dir, tmp_path):
     from hadoop_brotli_spark.catalog import load_table
     from hadoop_brotli_spark.sources.bro_codec import Bro2Writer, BroConfig
     from hadoop_brotli_spark.sources.bro_datasource import register_bro_source
+    from hadoop_brotli_spark.sources.bro_spark import (
+        read_bro_text,
+        write_bro_text,
+    )
 
     register_bro_source(spark)
     out = str(tmp_path / "stream_bro")
@@ -248,8 +261,11 @@ def test_bro_datasource_streaming(spark, sf_dir, tmp_path):
     )
     try:
         q.processAllAvailable()
-        n1 = spark.sql("SELECT COUNT(*) c FROM t_ds_bro").first().c
-        assert n1 == nation.count()
+        first = sorted(r.value for r in nation.collect())
+        got_first = sorted(
+            r.value for r in spark.sql("SELECT value FROM t_ds_bro").collect()
+        )
+        assert got_first == first
         # late-arriving file → next micro-batch. Published atomically
         # (tmp + os.replace, framed) — the source's publish contract;
         # the footer probe admits it on the first poll after rename.
@@ -260,10 +276,34 @@ def test_bro_datasource_streaming(spark, sf_dir, tmp_path):
         os.replace(tmp, f"{out}/late-00000.bro")
         q.processAllAvailable()
         n2 = spark.sql("SELECT COUNT(*) c FROM t_ds_bro").first().c
-        assert n2 == n1 + 1
+        assert n2 == len(first) + 1
     finally:
         q.stop()
     assert len(glob.glob(f"{out}/*.bro")) == 3
+
+    # second wave in a subdirectory; a new query over the glob drains
+    # both waves
+    docs = load_table(spark, sf_dir, "documents").select(
+        F.col("text").alias("value")
+    )
+    assert write_bro_text(docs.coalesce(1), os.path.join(out, "wave2")) == 1
+    q2 = (
+        spark.readStream.format("bro")
+        .load(out + "/*")
+        .select("value")
+        .writeStream.format("memory")
+        .queryName("t_ds_bro_waves")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q2.awaitTermination(60)
+    expected = sorted(first + ["extra_row"] + [r.value for r in docs.collect()])
+    batch_all = sorted(r.value for r in read_bro_text(spark, out + "/*").collect())
+    assert batch_all == expected
+    got_all = sorted(
+        r.value for r in spark.sql("SELECT value FROM t_ds_bro_waves").collect()
+    )
+    assert got_all == batch_all
 
 
 def test_bro_stream_watermark_defers_inflight(tmp_path):
@@ -652,6 +692,23 @@ def test_bro_stream_clean_source(tmp_path):
     moved = d2 / "_archive" / "c.bro"
     assert moved.exists()
     assert _file_key(str(moved)) == key_c  # mtime + name preserved
+
+    # archive-dir matched by a glob path: the reader must not list the
+    # files it archived
+    d3 = tmp_path / "glob"
+    os.makedirs(d3)
+    e = publish(d3, "e.bro", now)
+    key_e = _file_key(e)
+    r3 = BroStreamReader({
+        "path": f"{d3}/*",
+        "bro.stream.clean-source": "archive",
+        "bro.stream.archive-dir": str(d3 / "_archive"),
+    })
+    assert r3.latestOffset() == {"wm": key_e}
+    r3.commit({"wm": key_e})
+    assert (d3 / "_archive" / "e.bro").exists()
+    parts = r3.partitions({"wm": [-1, ""]}, {"wm": key_e})
+    assert [type(p).__name__ for p in parts] == ["_BroEmptyPartition"]
 
     import pytest
 

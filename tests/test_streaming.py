@@ -145,60 +145,6 @@ def test_late_data_dropped_with_watermark(spark, tmp_path):
     assert emitted == 1
 
 
-def test_stream_bro_source(spark, sf_dir, tmp_path):
-    """Streaming .bro ingestion sees the same rows as the batch
-    reader, including files added between micro-batches."""
-    from hadoop_brotli_spark.catalog import load_table
-    from hadoop_brotli_spark.sources.bro_spark import (
-        read_bro_text,
-        stream_bro_text,
-        write_bro_text,
-    )
-
-    out = str(tmp_path / "bro_stream")
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("text").alias("value")
-    )
-    first, second = docs.filter("length(value) % 2 = 0"), docs.filter(
-        "length(value) % 2 = 1"
-    )
-    write_bro_text(first.coalesce(1), out)
-
-    stream = stream_bro_text(spark, out).select("value")
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("bro_stream_t")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-
-    # second wave of files, then drain again
-    import os
-
-    sub = os.path.join(out, "wave2")
-    write_bro_text(second.coalesce(1), sub)
-    q2 = (
-        stream_bro_text(spark, out + "/*")  # both waves
-        .select("value")
-        .writeStream.format("memory")
-        .queryName("bro_stream_t2")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(60)
-
-    got_first = sorted(
-        r.value for r in spark.sql("SELECT value FROM bro_stream_t").collect()
-    )
-    assert got_first == sorted(r.value for r in first.collect())
-    batch_all = sorted(r.value for r in read_bro_text(spark, out + "/*").collect())
-    got_all = sorted(
-        r.value for r in spark.sql("SELECT value FROM bro_stream_t2").collect()
-    )
-    assert got_all == batch_all
-
-
 def test_streaming_dedup(spark, sf_dir, tmp_path):
     """Duplicated input files → dropDuplicates-with-watermark keeps
     exactly one row per event_id (== the batch distinct count)."""
