@@ -23,7 +23,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def fan_out(df: DataFrame) -> DataFrame:
+def fan_out(df: DataFrame, after_shuffle: bool = False) -> DataFrame:
     """Repartition a small-scan input up to the session's default
     parallelism BEFORE a row-multiplying transform (explode /
     shingle / trigram).
@@ -35,12 +35,18 @@ def fan_out(df: DataFrame) -> DataFrame:
     repartition shuffles only the SMALL pre-explosion rows. No-op
     when the scan already has enough splits (the 100 TB case, where
     inputs arrive in thousands of partitions).
+
+    ``after_shuffle=True`` is for an input that comes out of a shuffle
+    (an aggregate): it skips the probe and always repartitions. AQE
+    coalesces a small shuffle into as few as one partition at run
+    time, which the plan-time count cannot see, and ``df.rdd`` of a
+    shuffled frame under AQE would run its stages.
     """
     spark = df.sparkSession
     try:
         # classic (JVM-local) session: exact partition-count probe
         target = spark.sparkContext.defaultParallelism
-        current = df.rdd.getNumPartitions()
+        current = 1 if after_shuffle else df.rdd.getNumPartitions()
     except Exception:
         # Spark Connect exposes neither sparkContext nor .rdd; fall
         # back to shuffle-partition target and a file-count heuristic
@@ -49,7 +55,7 @@ def fan_out(df: DataFrame) -> DataFrame:
         # missed fan-out)
         target = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
         try:
-            current = max(1, len(df.inputFiles()))
+            current = 1 if after_shuffle else max(1, len(df.inputFiles()))
         except Exception:
             current = 1
     if current < target:
