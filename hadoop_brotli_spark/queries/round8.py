@@ -1212,7 +1212,8 @@ HEAPS_CKPTS = 10
     fit AS (
       SELECT COUNT(*) AS m,
              SUM(x) AS sx, SUM(y) AS sy,
-             SUM(x * y) AS sxy, SUM(x * x) AS sxx
+             SUM(x * y) AS sxy, SUM(x * x) AS sxx,
+             MIN(x) AS x_lo, MAX(x) AS x_hi
       FROM pts
     )
     SELECT CAST(f.m AS BIGINT) AS n_points,
@@ -1220,16 +1221,18 @@ HEAPS_CKPTS = 10
            CAST(g.vocab AS BIGINT) AS vocab_final,
            (FLOOR(CAST((CAST(f.m AS DOUBLE) * CAST(f.sxy AS DOUBLE)
                   - CAST(f.sx AS DOUBLE) * CAST(f.sy AS DOUBLE))
-                 / NULLIF(CAST(f.m AS DOUBLE) * CAST(f.sxx AS DOUBLE)
+                 / CASE WHEN f.x_lo < f.x_hi THEN
+                   NULLIF(CAST(f.m AS DOUBLE) * CAST(f.sxx AS DOUBLE)
                           - CAST(f.sx AS DOUBLE)
-                            * CAST(f.sx AS DOUBLE), 0) AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0) AS heaps_beta,
+                            * CAST(f.sx AS DOUBLE), 0) END AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0) AS heaps_beta,
            (FLOOR(CAST(EXP(CAST(f.sy AS DOUBLE) / f.m
                      - ((CAST(f.m AS DOUBLE) * CAST(f.sxy AS DOUBLE)
                          - CAST(f.sx AS DOUBLE) * CAST(f.sy AS DOUBLE))
-                        / NULLIF(CAST(f.m AS DOUBLE)
+                        / CASE WHEN f.x_lo < f.x_hi THEN
+                          NULLIF(CAST(f.m AS DOUBLE)
                                  * CAST(f.sxx AS DOUBLE)
                                  - CAST(f.sx AS DOUBLE)
-                                   * CAST(f.sx AS DOUBLE), 0))
+                                   * CAST(f.sx AS DOUBLE), 0) END)
                        * CAST(f.sx AS DOUBLE) / f.m) AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0) AS heaps_k
     FROM fit f,
          (SELECT n_tokens, vocab FROM growth
@@ -1250,7 +1253,10 @@ def q511_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(28,9) so the 10-point OLS moments are order-free; the
     slope/intercept divisions are the only ungridded doubles,
     identical operands both engines, ROUND-6 out. Degenerate corpora
-    (single doc -> one point) NULL the slope via NULLIF identically.
+    (every point on one x, e.g. a single doc) NULL the slope and K
+    identically: zero variance is decided exactly on the DECIMAL grid
+    (MIN(x) = MAX(x)) before any DOUBLE arithmetic, whose rounding
+    residue can leave a nonzero denominator on one engine only.
 
     Scale: one word-grain MIN aggregate + one doc-grain token count;
     each doc/word lands in its checkpoint BUCKET (no per-checkpoint
@@ -1333,6 +1339,8 @@ def q511_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("y").alias("sy"),
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
+        F.min("x").alias("x_lo"),
+        F.max("x").alias("x_hi"),
     )
     final = growth.filter(F.col("ck") == HEAPS_CKPTS).select(
         F.col("n_tokens").alias("tokens_final"),
@@ -1342,10 +1350,13 @@ def q511_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     beta = (
         md * F.col("sxy").cast("double")
         - F.col("sx").cast("double") * F.col("sy").cast("double")
-    ) / F.nullif(
-        md * F.col("sxx").cast("double")
-        - F.col("sx").cast("double") * F.col("sx").cast("double"),
-        F.lit(0.0),
+    ) / F.when(
+        F.col("x_lo") < F.col("x_hi"),
+        F.nullif(
+            md * F.col("sxx").cast("double")
+            - F.col("sx").cast("double") * F.col("sx").cast("double"),
+            F.lit(0.0),
+        ),
     )
     return fit.crossJoin(F.broadcast(final)).select(
         F.col("m").cast("bigint").alias("n_points"),

@@ -814,6 +814,11 @@ def test_wrong_or_missing_dictionary_is_corruption(tmp_path):
         b"".join(read_bro_bytes(p, bad))  # wrong dict
 
 
+def test_removed_backend_fails_loudly():
+    with pytest.raises(ValueError, match="expected one of auto, zlib, brotli"):
+        BroConfig.from_options({"bro.backend": "stored-brotli"})
+
+
 def test_brotli_dictionary_corruption_via_bro2_crc(tmp_path):
     """Brotli raw dictionaries carry no checksum (unlike zlib FDICT),
     so the detection layer is the BRO2 container: the per-block crc32
@@ -1148,76 +1153,53 @@ class TestBro2Framed:
 
 
 # ---------------------------------------------------------------------------
-# Stored-mode brotli bitstream (RFC 7932 §9.2 interop without a wheel)
+# Stored-mode brotli read compatibility (RFC 7932 §9.2)
+#
+# Earlier versions wrote uncompressed-metablock brotli through a
+# dedicated stored-mode backend. The files in tests/data were written
+# by that writer; they must keep reading through the full decoders.
 # ---------------------------------------------------------------------------
+
+DATA = os.path.join(os.path.dirname(__file__), "data")
+
+
+def _stored_v1() -> tuple[str, bytes]:
+    """(path of a 2-metablock stored-mode v1 stream, its plain text)."""
+    with open(os.path.join(DATA, "stored_v1.txt"), "rb") as f:
+        return os.path.join(DATA, "stored_v1.bro"), f.read()
 
 
 class TestStoredBrotli:
-    def test_roundtrip(self):
-        import os as _os
-
-        from hadoop_brotli_spark.sources.bro_codec import (
-            decode_brotli_stored,
-            encode_brotli_stored,
-            looks_like_brotli_stored,
-            looks_like_zlib,
-        )
-
-        for payload in (b"", b"a", b"hello world\n" * 100, _os.urandom(200_000)):
-            enc = encode_brotli_stored(payload)
-            assert decode_brotli_stored(enc) == payload
-            assert looks_like_brotli_stored(enc[:2])
-            assert not looks_like_zlib(enc[:2])
-
-    def test_bit_layout_matches_spec(self):
-        """Independent bit-level check of the emitted stream against
-        RFC 7932 hand-computed values (guards symmetric bugs the
-        roundtrip can't see): for payload b'hi' —
-        bit 0:   WBITS '0' (window 16)
-        bit 1:   ISLAST 0
-        bits 2-3: MNIBBLES '00' (4 nibbles)
-        bits 4-19: MLEN-1 = 1
-        bit 20:  ISUNCOMPRESSED 1
-        pad to byte 3, then raw 'hi', then terminator byte '11' = 0x03.
-        """
-        from hadoop_brotli_spark.sources.bro_codec import encode_brotli_stored
-
-        enc = encode_brotli_stored(b"hi")
-        bits = [(enc[i >> 3] >> (i & 7)) & 1 for i in range(24)]
-        assert bits[0] == 0  # WBITS -> 16
-        assert bits[1] == 0  # ISLAST
-        assert bits[2:4] == [0, 0]  # MNIBBLES code 0 -> 4 nibbles
-        mlen_minus_1 = sum(b << i for i, b in enumerate(bits[4:20]))
-        assert mlen_minus_1 == 1
-        assert bits[20] == 1  # ISUNCOMPRESSED
-        assert bits[21:24] == [0, 0, 0]  # pad to byte boundary
-        assert enc[3:5] == b"hi"
-        assert enc[5] == 0b00000011  # ISLAST=1, ISLASTEMPTY=1
-        assert len(enc) == 6
-
-    def test_empty_stream_is_one_byte(self):
-        from hadoop_brotli_spark.sources.bro_codec import encode_brotli_stored
-
-        # WBITS '0' + ISLAST 1 + ISLASTEMPTY 1 -> 0b110
-        assert encode_brotli_stored(b"") == b"\x06"
-
     @pytest.mark.skipif(
         not has_brotli_encoder(),
         reason="no real brotli implementation (wheel or system libbrotli)",
     )
     def test_real_brotli_decodes_our_streams(self):
-        """THE interop proof (self-activating): a conformant decoder
-        (the same C library the reference codec binds, via wheel or
-        ctypes) must read our stored-mode streams byte-for-byte."""
-        from hadoop_brotli_spark.sources.bro_codec import (
-            _BrotliDecompressor,
-            encode_brotli_stored,
-        )
+        """A conformant decoder (the same C library the reference codec
+        binds, via wheel or ctypes) reads stored-mode streams
+        byte-for-byte."""
+        from hadoop_brotli_spark.sources.bro_codec import _BrotliDecompressor
 
-        for payload in (b"", b"hello", b"payload " * 50_000):
+        path, want = _stored_v1()
+        with open(path, "rb") as f:
             d = _BrotliDecompressor()
-            assert d.decompress(encode_brotli_stored(payload)) + d.finish() \
-                == payload
+            assert d.decompress(f.read()) + d.finish() == want
+
+    def test_read_bro_bytes_sniffs_stored_v1_as_brotli(self):
+        path, want = _stored_v1()
+        assert b"".join(read_bro_bytes(path)) == want
+
+    def test_bro2_header_code_3_is_corruption(self, tmp_path):
+        from hadoop_brotli_spark.sources.bro_codec import read_bro2_bytes
+
+        with open(os.path.join(DATA, "stored_bro2.bro"), "rb") as f:
+            raw = bytearray(f.read())
+        raw[5] |= 3
+        path = str(tmp_path / "code3.bro")
+        with open(path, "wb") as f:
+            f.write(raw)
+        with pytest.raises(BroCorruptError, match="unknown backend code"):
+            b"".join(read_bro2_bytes(path))
 
     def test_golden_vector_decode(self):
         """Checked-in golden brotli stream (libbrotli q6 output) — the
@@ -1228,40 +1210,24 @@ class TestStoredBrotli:
         golden = bytes.fromhex("0b028068656c6c6f03")
         assert brotli_decompress(golden) == b"hello"
 
-    def test_datasource_stored_backend(self, spark, sf_dir, tmp_path):
-        """format('bro') with bro.backend=stored-brotli writes framed
-        files whose blocks are genuine brotli bitstreams; reads
-        round-trip through the stored decoder."""
-        from pyspark.sql import functions as F
-
+    def test_datasource_stored_backend(self, spark, sf_dir):
+        """A BRO2 file whose header carries backend code 2
+        (stored-mode blocks, nation names in 64-byte blocks) reads
+        back through format('bro'), one partition per block."""
         from hadoop_brotli_spark.catalog import load_table
-        from hadoop_brotli_spark.sources.bro_codec import (
-            decode_brotli_stored,
-            read_bro2_index,
-        )
+        from hadoop_brotli_spark.sources.bro_codec import read_bro2_index
         from hadoop_brotli_spark.sources.bro_datasource import (
             register_bro_source,
         )
 
+        path = os.path.join(DATA, "stored_bro2.bro")
+        with open(path, "rb") as f:
+            assert f.read(6)[5] & 3 == 2
+        header, blocks = read_bro2_index(path)
+        assert header.backend == "brotli" and len(blocks) == 4
         register_bro_source(spark)
-        nation = load_table(spark, sf_dir, "nation").select(
-            F.col("n_name").alias("value")
-        )
-        out = str(tmp_path / "stored_bro")
-        nation.coalesce(1).write.format("bro").option(
-            "bro.backend", "stored-brotli"
-        ).mode("append").save(out)
-        import glob
-
-        files = glob.glob(f"{out}/*.bro")
-        header, blocks = read_bro2_index(files[0])
-        assert header.backend == "stored-brotli"
-        # every block is a standalone valid brotli stream
-        with open(files[0], "rb") as f:
-            f.seek(blocks[0].offset)
-            raw = f.read(blocks[0].clen)
-        assert decode_brotli_stored(raw)  # decodes, non-empty
-        back = spark.read.format("bro").load(out)
+        back = spark.read.format("bro").load(path)
+        assert back.rdd.getNumPartitions() == 4
         assert sorted(r.value for r in back.collect()) == sorted(
             r.n_name for r in load_table(spark, sf_dir, "nation").collect()
         )

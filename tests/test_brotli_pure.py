@@ -25,10 +25,7 @@ import random
 
 import pytest
 
-from hadoop_brotli_spark.sources.bro_codec import (
-    encode_brotli_stored,
-    has_brotli_encoder,
-)
+from hadoop_brotli_spark.sources.bro_codec import has_brotli_encoder
 from hadoop_brotli_spark.sources.brotli_pure import (
     BrotliDecodeError,
     brotli_decompress,
@@ -51,8 +48,13 @@ def test_golden_quality11_decode():
 
 
 def test_stored_mode_streams_decode():
-    for payload in (b"", b"x", b"hello world" * 999, os.urandom(70_000)):
-        assert brotli_decompress(encode_brotli_stored(payload)) == payload
+    """``stored_v1.bro``: two uncompressed metablocks (RFC 7932 §9.2)
+    written by the stored-mode writer of earlier versions."""
+    with open(os.path.join(DATA, "stored_v1.bro"), "rb") as f:
+        comp = f.read()
+    with open(os.path.join(DATA, "stored_v1.txt"), "rb") as f:
+        want = f.read()
+    assert brotli_decompress(comp) == want
 
 
 def _encode(data: bytes, quality: int, lgwin: int = 22) -> bytes:

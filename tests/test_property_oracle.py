@@ -559,7 +559,8 @@ DOC_QUERIES = [
     # the left-join max_rep=0 path; single-word docs have no repeats
     "q509_intradoc_repetition",
     # r8: single-doc corpora collapse all 10 checkpoints onto one
-    # point (NULL beta via NULLIF on both engines); tiny word pools
+    # x (NULL beta and K: MIN(x) = MAX(x) on the decimal grid, before
+    # any double arithmetic, on both engines); tiny word pools
     # saturate the vocabulary at checkpoint 1 (beta ~ 0, K ~ |V| —
     # the exact-decimal OLS moments must agree on the flat curve)
     "q511_heaps_law_fit",
