@@ -88,14 +88,18 @@ def main(argv: list[str] | None = None) -> int:
                 print(f"{name}\t{oracle}\t{specs[name].category}")
         return 0
 
+    if args.cmd in ("run", "verify"):
+        # an unknown name fails before the JVM start it would not need
+        specs = load_all_queries()
+        if args.name not in specs and not (
+                args.cmd == "verify" and args.name == "all"):
+            print(f"unknown query {args.name!r}; see `list`",
+                  file=sys.stderr)
+            return 2
+
     spark = get_spark("hbs-cli")
     try:
         if args.cmd == "run":
-            specs = load_all_queries()
-            if args.name not in specs:
-                print(f"unknown query {args.name!r}; see `list`",
-                      file=sys.stderr)
-                return 2
             df = specs[args.name].fn(spark, args.sf_dir)
             if args.explain:
                 from .plans.inspect import explain_string
@@ -109,12 +113,7 @@ def main(argv: list[str] | None = None) -> int:
         elif args.cmd == "verify":
             from .oracle import compare
 
-            specs = load_all_queries()
             names = sorted(specs) if args.name == "all" else [args.name]
-            if args.name != "all" and args.name not in specs:
-                print(f"unknown query {args.name!r}; see `list`",
-                      file=sys.stderr)
-                return 2
             n_fail = 0
             for name in names:
                 try:

@@ -51,3 +51,14 @@ def test_cli_verify_one():
 def test_cli_verify_unknown():
     p = _run("verify", "q_nope")
     assert p.returncode == 2
+
+
+def test_unknown_query_fails_before_spark_starts(monkeypatch):
+    from hadoop_brotli_spark import __main__ as cli
+
+    def no_spark(*_):
+        raise AssertionError("Spark started for an unknown query")
+
+    monkeypatch.setattr(cli, "get_spark", no_spark)
+    assert cli.main(["run", "q_nope"]) == 2
+    assert cli.main(["verify", "q_nope"]) == 2
