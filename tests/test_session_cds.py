@@ -18,7 +18,6 @@ from pyspark.find_spark_home import _find_spark_home
 from hadoop_brotli_spark import session
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture
@@ -202,7 +201,7 @@ def test_running_jvm_claims_no_lock(spark, cache):
     assert not cache.exists()
 
 
-def test_cli_stdout_stays_json_while_writing_and_mapping(cache, tmp_path):
+def test_cli_stdout_stays_json_while_writing_and_mapping(cache, sf_dir):
     """JVM warnings (a refused archive, say) must not reach the stdout
     that ``run --json`` writes its rows to."""
     env = dict(os.environ, SPARK_DRIVER_MEM="1g")
@@ -211,7 +210,7 @@ def test_cli_stdout_stays_json_while_writing_and_mapping(cache, tmp_path):
         # the JVM holds the pipes until it exits, archive written
         p = subprocess.run(
             [sys.executable, "-m", "hadoop_brotli_spark", "run",
-             "q01_pricing_summary", "--sf-dir", SF, "--json"],
+             "q01_pricing_summary", "--sf-dir", sf_dir, "--json"],
             cwd=ROOT, env=env, capture_output=True, text=True, timeout=300)
         assert p.returncode == 0, p.stderr[-2000:]
         lines = [ln for ln in p.stdout.splitlines() if ln.strip()]
