@@ -3,7 +3,8 @@
  * interop gap (r6 verdict, What's-missing #1): a stock JVM
  * Hadoop/Spark job can now read reference-written (libbrotli)
  * `.bro` files at ANY quality, not just the trivial-header subset
- * the repo's pure encoder emits.
+ * BroHuffman writes (its streams are pinned by
+ * tests/data/jvm_encoder_golden.json).
  *
  * This is a line-for-line port of the repo's own pure-Python decoder
  * (hadoop_brotli_spark/sources/brotli_pure.py — a from-scratch

@@ -4,26 +4,25 @@
  * stock Hadoop writer emitted valid-but-ratio-1.0 brotli).
  *
  * ENCODER: quality-0 brotli — one insert-only command per metablock,
- * canonical length-limited Huffman over the literal bytes, with the
- * same uncompressed fallback guard as the Python encoder. Output is
- * BYTE-IDENTICAL to hadoop_brotli_spark/sources/brotli_encoder.py
- * `brotli_compress(data, quality=0)` (asserted in
- * tests/test_jvm_codec.py), so the package-merge tie-breaking,
- * repeat-run numeration, and simple/complex prefix-code forms mirror
- * that file line-for-line. Reference parity: the reference's JNI
- * path compresses via libbrotli (BroCompressor.java:116-148 ->
- * bro.cc:77-87); this is the dependency-free JVM equivalent of the
- * repo's pure-Python encoder floor.
+ * canonical length-limited Huffman over the literal bytes, with an
+ * uncompressed fallback guard; LZ77 commands from quality 1. It was
+ * ported from a pure-Python encoder that no longer exists. Its output
+ * at qualities 0, 1, 5 and 7 is pinned byte for byte by the sha256
+ * digests of that encoder's streams, kept in
+ * tests/data/jvm_encoder_golden.json and asserted in
+ * tests/test_jvm_codec.py, so any change to the
+ * package-merge tie-breaking, repeat-run numeration, prefix-code forms
+ * or parse policy fails those tests. Reference parity: the reference's
+ * JNI path compresses via libbrotli (BroCompressor.java:116-148 ->
+ * bro.cc:77-87); this is the dependency-free JVM writer.
  *
- * DECODER: the trivial-header-shape subset of RFC 7932 that the pure
- * Python encoder emits at EVERY quality — single block type per
- * category, NPOSTFIX=0, NDIRECT=0, one literal tree, one distance
- * tree, explicit-distance command cells only. A JVM reader can
- * therefore decode any wheel-less-Python-written `.bro`, not just
- * stored-mode. Full-format streams (context maps, multiple block
- * types, implicit distances, static-dictionary references) are
- * rejected with a pointer at the PySpark reader chain, same as the
- * stored shim.
+ * DECODER: the trivial-header-shape subset of RFC 7932 that this
+ * encoder emits at EVERY quality — single block type per category,
+ * NPOSTFIX=0, NDIRECT=0, one literal tree, one distance tree,
+ * explicit-distance command cells only. Full-format streams (context
+ * maps, multiple block types, implicit distances, static-dictionary
+ * references) are rejected with a pointer at the PySpark reader
+ * chain, same as the stored shim.
  */
 package io.spark_graft.bro;
 
@@ -348,16 +347,14 @@ final class BroHuffman {
   // --- static-dictionary matching (r8; RFC 7932 section 8) ---------------
   // Identity transform only: a match of length L at stream position p
   // encodes as distance min(p, window) + 1 + word_index. The probe
-  // policy mirrors brotli_encoder._lz_parse BYTE-IDENTICALLY (change
-  // both or neither): quality >= DICT_QUALITY, word-boundary starts
-  // (previous byte non-alphanumeric), 4-byte-prefix prefilter,
-  // LONGEST length first down to lzLen+1, first-occurrence-wins
-  // indices for duplicated dictionary words.
+  // policy is pinned by the q5/q7 goldens: quality >= DICT_QUALITY,
+  // word-boundary starts (previous byte non-alphanumeric), 4-byte-
+  // prefix prefilter, LONGEST length first down to lzLen+1, first-
+  // occurrence-wins indices for duplicated dictionary words.
 
   static final int DICT_QUALITY = 5;
-  // one-position lazy matching from this quality up (r9; mirrors
-  // brotli_encoder._LAZY_QUALITY byte-identically — change both or
-  // neither)
+  // one-position lazy matching from this quality up (r9; pinned by
+  // the q7 goldens)
   static final int LAZY_QUALITY = 7;
 
   private static java.util.HashMap<String, Integer> dictWords;
@@ -398,7 +395,7 @@ final class BroHuffman {
     return lzParse(data, off, n, maxDist, 0L, false, false);
   }
 
-  /** Greedy LZ77 parse (port of brotli_encoder._lz_parse): commands
+  /** Greedy LZ77 parse: commands
    *  {litStart, litEnd, copyLen, distance} relative to off; matches
    *  are 4+ bytes via a last-position table on 4-byte keys. The
    *  final command may be insert-only (copyLen 0). With useDict,
@@ -482,7 +479,7 @@ final class BroHuffman {
   }
 
   /** Distance -> {symbol, extra value, extra bits} with NPOSTFIX=0,
-   *  NDIRECT=0 (port of brotli_encoder._dist_symbol). */
+   *  NDIRECT=0. */
   static int[] distSymbol(int distance) {
     int v = distance + 3;
     int nbits = 32 - Integer.numberOfLeadingZeros(v) - 2;
@@ -505,9 +502,8 @@ final class BroHuffman {
   /** One metablock: quality 0 = single insert-only command (Huffman
    *  over literals); quality >= 1 = greedy LZ77 commands with
    *  explicit distances; quality >= DICT_QUALITY additionally emits
-   *  static-dictionary references — all byte-identical to the Python
-   *  pure encoder (brotli_encoder._encode_metablock) at the same
-   *  quality. basePos = stream bytes before this chunk (dictionary
+   *  static-dictionary references (pinned by the goldens at each
+   *  quality). basePos = stream bytes before this chunk (dictionary
    *  distances are stream-position-relative). Uncompressed fallback
    *  if the compressed body is not smaller. */
   static void encodeMetablock(BitWriter bw, byte[] chunk, int off, int mlen,
@@ -618,15 +614,15 @@ final class BroHuffman {
     return m[iHigh][cHigh];
   }
 
-  /** One-shot compression — byte-identical to the Python pure
-   *  encoder's brotli_compress(data, quality=q). */
+  /** One-shot compression; its streams are the ones the goldens
+   *  pin. */
   static byte[] compress(byte[] data) { return compress(data, 0); }
 
   static byte[] compress(byte[] data, int quality) {
     BitWriter bw = new BitWriter();
     bw.write(1, 1);
     bw.write(WBITS - 17, 3);
-    // mirror the Python streaming shape byte-exactly: FULL blocks are
+    // same shape as the streaming writer: FULL blocks are
     // always non-last (compress() can't know a block is final); a
     // remainder chunk is the last metablock, otherwise an empty last
     // metablock terminates (also covers empty input)
@@ -646,8 +642,8 @@ final class BroHuffman {
   }
 
   // ==================================================================
-  // subset DECODER: the trivial header shape the pure Python encoder
-  // emits at every quality (and this encoder at quality 0)
+  // subset DECODER: the trivial header shape this encoder emits at
+  // every quality
 
   /** LSB-first bit source; implemented over byte[] (one-shot decode)
    *  and over InputStream (metablock-at-a-time streaming decode). */

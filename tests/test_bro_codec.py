@@ -1231,3 +1231,57 @@ class TestStoredBrotli:
         assert sorted(r.value for r in back.collect()) == sorted(
             r.n_name for r in load_table(spark, sf_dir, "nation").collect()
         )
+
+
+@pytest.fixture
+def no_native_brotli(monkeypatch):
+    """A host with neither the brotli wheel nor a system libbrotli."""
+    from hadoop_brotli_spark.sources import bro_codec, brotli_ctypes
+
+    monkeypatch.setattr(bro_codec, "HAS_BROTLI", False)
+    monkeypatch.setattr(brotli_ctypes, "available", lambda: False)
+
+
+def test_no_native_encoder_brotli_write_raises_auto_writes_zlib(
+    no_native_brotli, tmp_path
+):
+    """There is no pure-Python brotli encoder: an explicit brotli
+    write fails with an error naming both native options, while
+    ``auto`` writes zlib and round-trips."""
+    from hadoop_brotli_spark.sources.bro_codec import (
+        resolve_backend,
+        write_bro2_bytes,
+    )
+
+    payload = b"entropy-one payloads compress well. " * 2000
+    brotli_cfg = BroConfig(backend="brotli")
+    with pytest.raises(ValueError, match="`brotli` wheel.*libbrotli"):
+        b"".join(compress_stream([payload], brotli_cfg))
+    path = tmp_path / "never.bro"
+    with pytest.raises(ValueError, match="`brotli` wheel.*libbrotli"):
+        write_bro2_bytes(payload, str(path), brotli_cfg)
+    assert not path.exists()
+
+    assert resolve_backend(BroConfig()) == "zlib"
+    comp = b"".join(compress_stream([payload], BroConfig()))
+    assert looks_like_zlib(comp[:2]) and len(comp) < len(payload) * 0.2
+    assert b"".join(decompress_stream([comp], BroConfig())) == payload
+
+
+def test_pure_decoder_fallback_warns_and_reads_fixtures(no_native_brotli):
+    """Without a native decoder every checked-in brotli stream still
+    reads, through the pure-Python decoder, and the slow path says so
+    with a warning that names the wheel and libbrotli."""
+    with open(os.path.join(DATA, "underscore.min.js.br"), "rb") as f:
+        js_br = f.read()
+    with open(os.path.join(DATA, "underscore.min.js"), "rb") as f:
+        js = f.read()
+    with open(os.path.join(DATA, "stored_v1.txt"), "rb") as f:
+        stored_txt = f.read()
+    nations = b"".join(b"NATION_%d\n" % i for i in range(25))
+    with pytest.warns(RuntimeWarning, match="`brotli` wheel.*libbrotli"):
+        assert b"".join(decompress_stream([js_br])) == js
+    for name, want in (("stored_v1.bro", stored_txt),
+                       ("stored_bro2.bro", nations)):
+        with pytest.warns(RuntimeWarning, match="pure-Python decoder"):
+            assert b"".join(read_bro_bytes(os.path.join(DATA, name))) == want

@@ -177,3 +177,30 @@ def test_reference_style_bro_file_reads(tmp_path):
     with open(p, "wb") as f:
         f.write(comp)
     assert b"".join(read_bro_bytes(p)) == want
+
+
+def test_pure_decoder_ceiling_guard(monkeypatch):
+    """The pure fallback buffers unframed streams whole, so an
+    over-ceiling stream fails loudly instead of OOM-ing an executor."""
+    from hadoop_brotli_spark.sources import bro_codec
+
+    # the ceiling is read lazily from the env, so a runtime override
+    # must take effect without re-import
+    monkeypatch.setenv("BRO_PURE_DECODE_CEILING_MB", "1")
+    assert bro_codec.pure_decode_ceiling() == 1 << 20
+    d = bro_codec._PureBrotliDecompressor()
+    with pytest.raises(IOError, match="ceiling"):
+        d.decompress(b"\0" * ((1 << 20) + 1))
+    # under the ceiling still works end-to-end
+    d2 = bro_codec._PureBrotliDecompressor()
+    d2.decompress(bytes.fromhex("0b028068656c6c6f03"))
+    assert d2.finish() == b"hello"
+    # malformed / non-positive values fail with actionable context
+    monkeypatch.setenv("BRO_PURE_DECODE_CEILING_MB", "lots")
+    with pytest.raises(ValueError, match="not an integer"):
+        bro_codec.pure_decode_ceiling()
+    monkeypatch.setenv("BRO_PURE_DECODE_CEILING_MB", "0")
+    with pytest.raises(ValueError, match="positive"):
+        bro_codec.pure_decode_ceiling()
+    monkeypatch.delenv("BRO_PURE_DECODE_CEILING_MB")
+    assert bro_codec.pure_decode_ceiling() == 256 << 20

@@ -8,14 +8,15 @@ reads any RFC 7932 brotli stream (``BroBrotliDecoder``) and JVM
 writers emit compressed metablocks, with zero native dependencies.
 
 These tests compile the codec with the JDK in this container against
-the hadoop-client jars bundled with pyspark, then prove
-cross-language equality:
+the hadoop-client jars bundled with pyspark, then check:
 
 - JVM output at each quality mode (``-q0``/``-lz``/``-d5``/``-l7``)
-  is BYTE-IDENTICAL to the pure-Python encoder
-  (``brotli_encoder.brotli_compress``) at the same quality;
-- the JVM decodes Python-written and libbrotli-written streams, and
-  the stored-mode streams earlier versions wrote (``tests/data``);
+  is BYTE-IDENTICAL to what the pure-Python encoder the JVM writer was
+  ported from emitted at the same quality. That encoder is gone;
+  ``tests/data/jvm_encoder_golden.json`` keeps the sha256 and length
+  of each of its streams, made before it was deleted;
+- the JVM decodes its own and libbrotli-written streams, and the
+  stored-mode streams earlier versions wrote (``tests/data``);
 - the pure-Python RFC 7932 decoder (``brotli_pure``) and libbrotli
   accept the JVM streams — genuine brotli, not a private framing;
 - truncated and corrupted streams fail loudly.
@@ -27,13 +28,16 @@ the codec jar is a deployment artifact, not a core engine path.
 from __future__ import annotations
 
 import glob
+import hashlib
+import json
 import os
 import shutil
 import subprocess
 
 import pytest
 
-from hadoop_brotli_spark.sources.brotli_pure import brotli_decompress
+from hadoop_brotli_spark.sources import _brotli_data
+from hadoop_brotli_spark.sources.brotli_pure import _dict_data, brotli_decompress
 
 JAVA_SRC = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -43,6 +47,39 @@ JAVA_SRC = os.path.join(
     "spark_graft",
     "bro",
 )
+DATA = os.path.join(os.path.dirname(__file__), "data")
+
+with open(os.path.join(DATA, "jvm_encoder_golden.json")) as _f:
+    GOLDEN = json.load(_f)
+
+
+def _digest(stream: bytes) -> dict:
+    return {"len": len(stream), "sha256": hashlib.sha256(stream).hexdigest()}
+
+
+def _assert_golden(stream: bytes, payload: bytes, quality: int) -> None:
+    """``stream`` is byte-identical to the pure-Python encoder's
+    ``brotli_compress(payload, quality)``, as pinned in the goldens."""
+    want = GOLDEN["streams"][f"q{quality}"][f"n{len(payload)}"]
+    assert _digest(stream) == want
+
+
+def _assert_real_decoders_accept(stream: bytes, payload: bytes) -> None:
+    """The independent decoders read ``stream`` back: the pure-Python
+    RFC 7932 decoder always, and libbrotli (wheel or ctypes) when
+    present — the conformance proof that these are genuine brotli
+    streams, not a private framing."""
+    assert brotli_decompress(stream) == payload
+    try:
+        import brotli  # type: ignore
+
+        assert brotli.decompress(stream) == payload
+    except ImportError:
+        from hadoop_brotli_spark.sources import brotli_ctypes
+
+        if brotli_ctypes.available():
+            d = brotli_ctypes.CtypesBrotliDecompressor()
+            assert d.decompress(stream) + d.finish() == payload
 
 
 def _hadoop_classpath() -> str | None:
@@ -95,10 +132,9 @@ def jvm_cli(tmp_path_factory):
 
 # --------------------------------------------------------------------------
 # round-6 verdict task 4: compressed-metablock JVM writes (BroHuffmanCodec
-# + BroHuffman, CLI modes compress-q0/decompress-q0). The encoder is the
-# quality-0 Huffman-only metablock writer ported from brotli_encoder.py;
-# the decoder reads the trivial-header-shape subset the pure Python
-# encoder emits at EVERY quality.
+# + BroHuffman, CLI modes compress-q0/decompress-q0). The encoder is a
+# port of the former pure-Python metablock writer, pinned byte for byte
+# by the goldens in tests/data/jvm_encoder_golden.json.
 
 # straddle the 1 MiB metablock boundary and force the uncompressed
 # fallback (high-entropy) on purpose
@@ -121,11 +157,7 @@ def test_jvm_q0_compress_matches_python_bit_for_bit(jvm_cli, payload):
     """JVM quality-0 output is BYTE-IDENTICAL to the pure Python
     encoder at quality 0 — same package-merge tie-breaking, repeat-run
     numeration, simple/complex prefix forms, fallback guard."""
-    from hadoop_brotli_spark.sources.brotli_encoder import brotli_compress
-
-    assert jvm_cli("compress-q0", payload) == brotli_compress(
-        payload, quality=0
-    )
+    _assert_golden(jvm_cli("compress-q0", payload), payload, 0)
 
 
 @pytest.mark.parametrize(
@@ -135,33 +167,18 @@ def test_jvm_q0_round_trips_and_real_decoders_accept(jvm_cli, payload):
     from_jvm = jvm_cli("compress-q0", payload)
     # JVM reads its own compressed output
     assert jvm_cli("decompress-q0", from_jvm) == payload
-    # the full pure-Python RFC 7932 decoder accepts it
-    assert brotli_decompress(from_jvm) == payload
-    # and real libbrotli accepts it when present (wheel or ctypes) —
-    # the independent-implementation conformance proof
-    try:
-        import brotli  # type: ignore
-
-        assert brotli.decompress(from_jvm) == payload
-    except ImportError:
-        from hadoop_brotli_spark.sources import brotli_ctypes
-
-        if brotli_ctypes.available():
-            d = brotli_ctypes.CtypesBrotliDecompressor()
-            assert d.decompress(from_jvm) + d.finish() == payload
+    _assert_real_decoders_accept(from_jvm, payload)
 
 
 @pytest.mark.parametrize(
     "payload", Q0_PAYLOADS, ids=[f"n{len(p)}" for p in Q0_PAYLOADS]
 )
 def test_jvm_reads_python_lz_streams(jvm_cli, payload):
-    """The subset decoder covers everything the pure Python encoder
-    emits at quality >= 1 too (LZ insert-and-copy commands, explicit
-    distances) — a JVM reader decodes any wheel-less-Python-written
-    .bro, not just quality 0."""
-    from hadoop_brotli_spark.sources.brotli_encoder import brotli_compress
-
-    assert jvm_cli("decompress-q0", brotli_compress(payload, quality=1)) == payload
+    """The decoder behind every CLI mode reads LZ streams (insert-and-
+    copy commands, explicit distances), not just quality 0. The
+    ``compress-lz`` output is the pure-Python encoder's quality-1
+    stream byte for byte (pinned by the goldens)."""
+    assert jvm_cli("decompress-q0", jvm_cli("compress-lz", payload)) == payload
 
 
 def test_jvm_q0_ratio_beats_stored_on_text(jvm_cli):
@@ -177,17 +194,12 @@ def test_jvm_q0_ratio_beats_stored_on_text(jvm_cli):
 )
 def test_jvm_lz_compress_matches_python_bit_for_bit(jvm_cli, payload):
     """r7 (r6 verdict What's-missing #2): JVM LZ77 writes. With
-    bro.quality >= 1 the JVM encoder runs the same greedy hash-table
-    parse as the Python pure encoder and emits byte-identical streams
-    — so every Python-side conformance proof (libbrotli golden, pure-
-    decoder round-trip) transfers to JVM output."""
-    from hadoop_brotli_spark.sources.brotli_encoder import brotli_compress
-
+    bro.quality >= 1 the JVM encoder runs a greedy hash-table parse
+    whose streams are pinned byte for byte by the q1 goldens."""
     from_jvm = jvm_cli("compress-lz", payload)
-    assert from_jvm == brotli_compress(payload, quality=1)
-    # JVM reads its own LZ output, and libbrotli accepts it if present
+    _assert_golden(from_jvm, payload, 1)
     assert jvm_cli("decompress-lz", from_jvm) == payload
-    assert brotli_decompress(from_jvm) == payload
+    _assert_real_decoders_accept(from_jvm, payload)
 
 
 def test_jvm_lz_ratio_beats_q0_on_repetitive_text(jvm_cli):
@@ -203,10 +215,17 @@ def test_jvm_lz_ratio_beats_q0_on_repetitive_text(jvm_cli):
 def _dict_rich_payload() -> bytes:
     """First-occurrence dictionary words: LZ77 cannot see them (no
     prior occurrence in the window) — only a static-dictionary match
-    can encode them as copies."""
-    from hadoop_brotli_spark.sources.brotli_encoder import _dict_index
-
-    words, _ = _dict_index()
+    can encode them as copies. The words are read from the RFC 7932
+    static dictionary the decoder ships."""
+    data = _dict_data()
+    words = set()
+    for length in range(4, 25):
+        sbits = _brotli_data.DICT_SIZE_BITS_BY_LENGTH[length]
+        if sbits == 0:
+            continue
+        base = _brotli_data.DICT_OFFSETS_BY_LENGTH[length]
+        for idx in range(1 << sbits):
+            words.add(data[base + length * idx : base + length * (idx + 1)])
     ws = sorted(w for w in words if len(w) >= 6 and w.isascii())[:1500]
     return b" ".join(ws)
 
@@ -222,23 +241,33 @@ DICT_PAYLOADS = [
 ]
 
 
+def test_goldens_pin_every_compared_input():
+    """Every payload the bit-for-bit tests compare has a golden digest
+    at each quality, and the dictionary-rich payload hashes as it did
+    when the goldens were made, so they keep meaning the same input."""
+    want = {
+        "q0": Q0_PAYLOADS, "q1": Q0_PAYLOADS,
+        "q5": DICT_PAYLOADS, "q7": DICT_PAYLOADS,
+    }
+    assert {q: sorted(v) for q, v in GOLDEN["streams"].items()} == {
+        q: sorted(f"n{len(p)}" for p in ps) for q, ps in want.items()
+    }
+    assert _digest(_dict_rich_payload()) == GOLDEN["dict_rich_payload"]
+
+
 @pytest.mark.parametrize(
     "payload", DICT_PAYLOADS, ids=[f"n{len(p)}" for p in DICT_PAYLOADS]
 )
 def test_jvm_dict_compress_matches_python_bit_for_bit(jvm_cli, payload):
     """r8 (r7 verdict task 6): static-dictionary writes. At
-    bro.quality >= 5 both encoders emit identity-transform dictionary
-    references (distance = min(pos, window) + 1 + word_index) under
-    the same boundary/prefix/longest-first probe policy — streams are
-    byte-identical, so the Python side's conformance evidence
-    transfers to JVM dictionary writes too."""
-    from hadoop_brotli_spark.sources.brotli_encoder import brotli_compress
-
+    bro.quality >= 5 the JVM encoder emits identity-transform
+    dictionary references (distance = min(pos, window) + 1 +
+    word_index) under a boundary/prefix/longest-first probe policy,
+    pinned byte for byte by the q5 goldens."""
     from_jvm = jvm_cli("compress-d5", payload)
-    assert from_jvm == brotli_compress(payload, quality=5)
-    # both decoders read the dictionary references back
+    _assert_golden(from_jvm, payload, 5)
     assert jvm_cli("decompress-d5", from_jvm) == payload
-    assert brotli_decompress(from_jvm) == payload
+    _assert_real_decoders_accept(from_jvm, payload)
 
 
 def test_jvm_dict_ratio_beats_lz_on_first_occurrence_text(jvm_cli):
@@ -260,17 +289,14 @@ def test_jvm_dict_ratio_beats_lz_on_first_occurrence_text(jvm_cli):
 )
 def test_jvm_lazy_compress_matches_python_bit_for_bit(jvm_cli, payload):
     """r9 (r8 verdict task 7): lazy-matching writes. At
-    bro.quality >= 7 both encoders run the same one-position
-    lookahead (defer an LZ match when the next position's candidate
-    extends strictly longer) on top of the dictionary probe — streams
-    stay byte-identical, so the Python conformance evidence transfers
-    to the lazy tier too."""
-    from hadoop_brotli_spark.sources.brotli_encoder import brotli_compress
-
+    bro.quality >= 7 the JVM encoder runs a one-position lookahead
+    (defer an LZ match when the next position's candidate extends
+    strictly longer) on top of the dictionary probe, pinned byte for
+    byte by the q7 goldens."""
     from_jvm = jvm_cli("compress-l7", payload)
-    assert from_jvm == brotli_compress(payload, quality=7)
+    _assert_golden(from_jvm, payload, 7)
     assert jvm_cli("decompress-l7", from_jvm) == payload
-    assert brotli_decompress(from_jvm) == payload
+    _assert_real_decoders_accept(from_jvm, payload)
 
 
 def test_jvm_lazy_ratio_improves_on_greedy(jvm_cli):

@@ -400,8 +400,11 @@ PINNED_EXCHANGES = {
     # r9 (+2): the checkpointed sources-x-bins histogram feeds three
     # branches as an ExistingRDD whose partitioning the planner no
     # longer recognizes, so two BOUNDED (|sources| x |bins|) exchanges
-    # reappear — the trade removes two corpus scans + histogram passes
-    "q141_distribution_drift": 11,
+    # reappear — the trade removes two corpus scans + histogram passes.
+    # r10 (-2, 11 -> 9): broadcast hints on the histogram in the
+    # zero-fill left join and on the CDF side of the pair join turn
+    # both sort-merge joins into broadcast joins
+    "q141_distribution_drift": 9,
     # r5 restructure: profile branch exchanges at vocabulary grain,
     # scores branch at doc x cand_lang — no doc-grain trigram shuffle
     "q82_lang_id_ngram": 7,
@@ -415,18 +418,22 @@ PINNED_EXCHANGES = {
     # shuffle: a second exchange here means they started to.
     "q422_jpeg_progressive_decode": 1,
     # r9 ratchet: the posting-list edge build + per-round label
-    # checkpoints leave only the final seed join's exchange visible
-    "q406_label_propagation": 1,
+    # checkpoints leave only the final seed join's exchange visible.
+    # r10 (1 -> 0): the seed label rides through the rounds as a
+    # column, so that final join against the supplier seed is gone
+    "q406_label_propagation": 0,
     # r5 depth addition: 10 = the 2-pass refinement's honest budget
     # (scalar bounds, 256-bucket histogram + cumulative walk, the
     # winning-bucket rank, final scalar joins; 1 scan reused)
     "q444_distributed_median": 10,
     # r9 ratchet: q459's greedy rounds are join-free aggregation
-    # passes over the checkpointed u-grain sim-array frame; what
-    # remains visible is the final assembly of the 1-row pick frames.
+    # passes over the checkpointed u-grain sim-array frame. r10
+    # (6 -> 0): each round's checkpointed pick frame now carries its
+    # own post-pick total, so the six cross-pass total-coverage joins
+    # that assembled them are gone and nothing is left to shuffle.
     # q480's rounds hide behind per-round localCheckpoints, leaving
     # only the final ranking exchange in the executed plan
-    "q459_facility_location_greedy": 6,
+    "q459_facility_location_greedy": 0,
     # r7 ratchet: every round hides behind its localCheckpoint
     "q480_textrank_keywords": 0,
     # r7 fix (r6 verdict task 2): cap joined BEFORE the pair
